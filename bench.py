@@ -15,7 +15,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from voter_gateway_spark.queries import QUERIES  # noqa: E402
-from voter_gateway_spark.session import build_spark  # noqa: E402
+from voter_gateway_spark.session import build_spark, codegen_stats  # noqa: E402
 
 # The r1 driver baseline: the 16 queries bench.py measured in round 1
 # and their recorded total (BENCH_r01.json, sf0.1). The operative
@@ -152,8 +152,9 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    # JVM + codegen warmup so per-query numbers measure the plan, not
-    # first-job class loading
+    # JVM warm-up: the first job pays class loading. It warms no other
+    # query's generated code — each query compiles its own classes in
+    # its first trial (trial_compiles in the detail file)
     QUERIES["q1_pricing_summary"](spark, sf_dir).count()
 
     # best-of-N per query: this box shows multi-second scheduler noise
@@ -188,14 +189,19 @@ def main() -> None:
     trial_sec: dict[str, list[float]] = {}
     shuffle_bytes: dict[str, int] = {}
     spill_bytes: dict[str, int] = {}
+    trial_compiles: dict[str, list[int]] = {}
+    trial_compile_ms: dict[str, list[float]] = {}
     for name in BENCH_QUERIES + extra:
         if name in skip:
             continue
         best = float("inf")
         trials: list[float] = []
         best_delta: tuple[int, int, int, int] | None = None
+        compiles: list[int] = []
+        compile_ms: list[float] = []
         for _ in range(runs):
             before = _stage_totals(spark)
+            cg0 = codegen_stats(spark)
             t0 = time.time()
             # the noop v2 sink forces FULL evaluation of every column.
             # count() (used through r3) lets Catalyst eliminate any
@@ -208,14 +214,21 @@ def main() -> None:
                 "overwrite"
             ).save()
             elapsed = time.time() - t0
+            cg1 = codegen_stats(spark)
             after = _stage_totals(spark)
             trials.append(round(elapsed, 3))
+            # classes compiled (codegen cache misses) and their compile
+            # time: nonzero in a later trial means the cache thrashes
+            compiles.append(cg1[0] - cg0[0])
+            compile_ms.append(round(cg1[1] - cg0[1], 1))
             if elapsed < best:
                 best = elapsed
                 if before is not None and after is not None:
                     best_delta = tuple(a - b for a, b in zip(after, before))
         timings[name] = round(best, 3)
         trial_sec[name] = trials
+        trial_compiles[name] = compiles
+        trial_compile_ms[name] = compile_ms
         if best_delta is not None:
             # shuffle volume = bytes WRITTEN to shuffle (each byte
             # counted once); spill = bytes that actually hit disk
@@ -264,6 +277,8 @@ def main() -> None:
             # from the artifact (which trial spiked) instead of only
             # from a rerun
             "trial_sec": trial_sec,
+            "trial_compiles": trial_compiles,
+            "trial_compile_ms": trial_compile_ms,
         }
         detail_path = os.environ.get(
             "SPARK_GRAFT_BENCH_DETAIL",

@@ -73,12 +73,31 @@ def test_custom_quote_embedded_delimiter(spark, tmp_path):
     assert rows == {"1": "Smith, John", "2": "O'Neil, Jane"}
 
 
-def test_latin1_encoding(spark, tmp_path):
+# Spark's charset name, the Python codec alias and the reference's own
+# spelling (csv_file.rb) must all read Latin-1
+LATIN1_NAMES = ["ISO-8859-1", "latin-1", "LATIN1"]
+
+
+@pytest.mark.parametrize("encoding", LATIN1_NAMES)
+def test_latin1_encoding(spark, tmp_path, encoding):
     from voter_gateway_spark.sources import CSVSource
 
     path = _write(tmp_path, "d.csv", "id,name\n1,Muñoz\n", encoding="latin-1")
-    df = CSVSource(path, quote='"', encoding="ISO-8859-1").read(spark)
+    df = CSVSource(path, quote='"', encoding=encoding).read(spark)
     assert df.collect()[0].name == "Muñoz"
+
+
+@pytest.mark.parametrize("remove_malformed", [False, True])
+def test_unsupported_encoding_names_supported_set(spark, tmp_path, remove_malformed):
+    """A codec Spark's CSV reader rejects (cp1252 is a Python codec but
+    not a Spark charset) raises a ValueError listing what it accepts,
+    on both read paths."""
+    from voter_gateway_spark.sources import CSVSource
+
+    path = _write(tmp_path, "w.csv", "id,name\n1,x\n")
+    src = CSVSource(path, quote='"', encoding="cp1252", remove_malformed=remove_malformed)
+    with pytest.raises(ValueError, match="'cp1252'.*iso-8859-1.*utf-8"):
+        src.read(spark)
 
 
 def test_custom_delimiter(spark, tmp_path):
@@ -148,7 +167,8 @@ def test_quoted_delimiter_not_counted_as_field_break(spark, tmp_path):
     assert src.malformed_count() == 1
 
 
-def test_latin1_encoding_slow_path(spark, tmp_path):
+@pytest.mark.parametrize("encoding", LATIN1_NAMES)
+def test_latin1_encoding_slow_path(spark, tmp_path, encoding):
     """The malformed-handling path must honor the encoding too:
     spark.read.text is UTF-8-only (silently ignores the option), so the
     raw-line scan goes through the csv reader. 'Muñoz' must survive
@@ -158,7 +178,7 @@ def test_latin1_encoding_slow_path(spark, tmp_path):
     path = _write(
         tmp_path, "lat1.csv", "id,name\n1,Muñoz\n2,ok\nbad\n", encoding="latin-1"
     )
-    src = CSVSource(path, quote='"', encoding="ISO-8859-1", remove_malformed=True)
+    src = CSVSource(path, quote='"', encoding=encoding, remove_malformed=True)
     rows = {r.id: r.name for r in src.read(spark).collect()}
     assert rows == {"1": "Muñoz", "2": "ok"}
     assert src.malformed_count() == 1

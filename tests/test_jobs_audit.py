@@ -117,9 +117,17 @@ def test_dedup_job_perform_commits(spark):
     assert rows[1] == 3 and rows[3] == 7   # fold template applied
 
 
+def _cached_plans(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().cachedData().size()
+
+
 def test_dedup_job_perform_audit_dry_runs(spark):
     table = _dup_table(spark)
+    cached = _cached_plans(spark)
     results = DocDedupJob(spark, table).perform_audit()
+    # the audit's cached match state is released, not left behind to be
+    # substituted into every later query with an equivalent plan
+    assert _cached_plans(spark) == cached
     assert len(results) == 1
     audit = results[0]
     assert isinstance(audit, DedupAuditResult)

@@ -307,8 +307,13 @@ def dedup_audit(plan) -> DedupAuditResult:
     matches = (
         plan._matches() if hasattr(plan, "_matches") else plan.match.matches()
     ).cache()
-    base = merge_audit(matches)
-    reflexive, symmetric = plan.invariant_counts(matches)
+    try:
+        base = merge_audit(matches)
+        reflexive, symmetric = plan.invariant_counts(matches)
+    finally:
+        # a cached plan left behind would be substituted into every
+        # later query with an equivalent plan, for the session's life
+        matches.unpersist()
     return DedupAuditResult(
         total=base.total,
         matched=base.matched,

@@ -274,6 +274,28 @@ def ckpt_cut(df: DataFrame) -> DataFrame:
         return materialized
 
 
+# Generated classes kept compiled per JVM (spark.sql.codegen.cache.maxEntries;
+# Spark's default of 100 is below every working set measured here, so a
+# repeated job recompiled all of its classes on every pass). Distinct
+# classes of one pass on local[4]: perfbench voter_import 214 and
+# corpus_dedup 226 (217 and 271 recompiled per warm pass at 100 entries);
+# bench.py's 37-query session 841 in all, at most 112 for one query
+# (pipeline_daily_ingest).
+CODEGEN_CACHE_MAX_ENTRIES = 1000
+
+
+def codegen_stats(spark: SparkSession) -> tuple[int, float]:
+    """(classes compiled, compile ms) by this JVM's codegen so far.
+
+    Both count cache misses only — a generated class served from the
+    codegen cache is not compiled again — so the difference of two
+    readings around a pass is that pass's compile work."""
+    jvm = spark.sparkContext._jvm
+    compiled = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_SOURCE_CODE_SIZE().getCount()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(compiled), nanos / 1e6
+
+
 def build_spark(
     app_name: str = "voter_gateway_spark",
     master: str | None = None,
@@ -286,6 +308,22 @@ def build_spark(
     explicit shuffle-partition sizing, Arrow enabled for the few
     pandas-UDF paths. On a real cluster, master/shuffle partitions
     come from spark-submit; this helper is for local runs and tests.
+
+    Generated-code cache: a pass of the engine's jobs compiles a few
+    hundred Janino classes (counts at CODEGEN_CACHE_MAX_ENTRIES), more
+    than Spark's default 100-entry LRU cache holds, so a session that
+    repeats a job recompiled every class on every pass and ran it cold
+    in the JIT again. The cache is sized above that working set, and
+    class names leave out the codegen stage id (an AQE re-plan can
+    renumber the stages of an unchanged plan, and the name is part of
+    the cache key). Only repeated plan shapes in one JVM gain: a
+    fresh session's first pass compiles everything either way.
+    ``spark.sql.codegen.cache.maxEntries`` is a static conf, read once
+    per JVM when it first generates code: ``getOrCreate`` on a running
+    session ignores it, and a later session in the same JVM keeps the
+    first size. Sessions built outside this helper must set it at
+    construction (``extra_conf`` overrides it here). SCALING.md
+    "Generated-code cache" has the measurements.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -307,6 +345,8 @@ def build_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     if reliable_checkpoint_dir():
         # without this, df.checkpoint() data is never deleted when the

@@ -19,10 +19,35 @@ count (A7) needs no extra scan of the original.
 
 from __future__ import annotations
 
+import codecs
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
+from pyspark.errors import IllegalArgumentException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# The charsets Spark 4's CSV reader accepts (its CharsetProvider.
+# VALID_CHARSETS), keyed by Python's canonical codec name so any Python
+# alias ("latin-1", "LATIN1", "l1") reaches Spark in Spark's spelling.
+SPARK_CHARSETS = {
+    "ascii": "us-ascii",
+    "iso8859-1": "iso-8859-1",
+    "utf-8": "utf-8",
+    "utf-16": "utf-16",
+    "utf-16-be": "utf-16be",
+    "utf-16-le": "utf-16le",
+    "utf-32": "utf-32",
+}
+
+
+def _spark_charset(encoding: str) -> str:
+    """Spark's name for a Python codec alias; other names pass through
+    unchanged (Spark's legacy Java-charset mode may still know them)."""
+    try:
+        return SPARK_CHARSETS.get(codecs.lookup(encoding).name, encoding)
+    except LookupError:
+        return encoding
 
 
 @dataclass
@@ -31,7 +56,7 @@ class CSVSource:
     delimiter: str = ","
     quote: str = "^"  # reference default quote char (csv_file.rb:14)
     header: bool = True
-    encoding: str = "UTF-8"  # reference uses LATIN1 for voter files
+    encoding: str = "UTF-8"  # any Python alias; reference uses LATIN1
     remove_expression: str | None = None  # S5 regex strip (whole line, global)
     remove_malformed: bool = False  # S6
 
@@ -50,14 +75,33 @@ class CSVSource:
             spark.read.option("sep", "\x01")
             .option("quote", "")
             .option("header", "false")
-            .option("encoding", self.encoding)
+            .option("encoding", _spark_charset(self.encoding))
             .schema("value STRING")
             .csv(self.path)
         )
 
-    def headers(self, spark: SparkSession) -> list[str]:
-        """S3 header sniffing — read only the first row."""
-        first = self._raw_lines(spark).limit(1).collect()
+    @contextmanager
+    def _charset_errors(self):
+        """Turn Spark's rejection of the encoding into a ValueError that
+        names the charsets it accepts."""
+        try:
+            yield
+        except IllegalArgumentException as exc:
+            if exc.getCondition() != "INVALID_PARAMETER_VALUE.CHARSET":
+                raise
+            raise ValueError(
+                f"CSVSource encoding {self.encoding!r} is not supported by "
+                "Spark's CSV reader; use one of "
+                f"{', '.join(sorted(SPARK_CHARSETS.values()))} "
+                "or a Python alias of one (e.g. 'latin-1')"
+            ) from exc
+
+    def _first_fields(self, spark: SparkSession) -> list[str]:
+        """The first physical line split with the csv dialect (after the
+        regex strip); [] for an empty file. This is the first action on
+        the raw lines, so an unsupported encoding fails here."""
+        with self._charset_errors():
+            first = self._raw_lines(spark).limit(1).collect()
         if not first:
             return []
         line = first[0][0]
@@ -65,14 +109,17 @@ class CSVSource:
             import re
 
             line = re.sub(self.remove_expression, "", line)
-        # parse the single header line with the csv dialect
         import csv as _csv
         import io
 
         reader = _csv.reader(
             io.StringIO(line), delimiter=self.delimiter, quotechar=self.quote
         )
-        return [h.strip() for h in next(reader)]
+        return next(reader)
+
+    def headers(self, spark: SparkSession) -> list[str]:
+        """S3 header sniffing — read only the first row."""
+        return [h.strip() for h in self._first_fields(spark)]
 
     def read(self, spark: SparkSession) -> DataFrame:
         """Load to an all-string DataFrame (S1/S4), applying the regex
@@ -83,14 +130,15 @@ class CSVSource:
         available via `malformed_count`.
         """
         if self.remove_expression is None and not self.remove_malformed:
-            return (
-                spark.read.option("sep", self.delimiter)
-                .option("quote", self.quote)
-                .option("header", str(self.header).lower())
-                .option("encoding", self.encoding)
-                .option("inferSchema", "false")
-                .csv(self.path)
-            )
+            with self._charset_errors():
+                return (
+                    spark.read.option("sep", self.delimiter)
+                    .option("quote", self.quote)
+                    .option("header", str(self.header).lower())
+                    .option("encoding", _spark_charset(self.encoding))
+                    .option("inferSchema", "false")
+                    .csv(self.path)
+                )
 
         import re as _re
 
@@ -101,26 +149,7 @@ class CSVSource:
             # names from it would turn field values into a (possibly
             # duplicate-named) schema; synthesize _c0.._cN exactly like
             # the fast csv path, sizing N from the first line's fields
-            first = self._raw_lines(spark).limit(1).collect()
-            if first:
-                import csv as _csv
-                import io as _io
-
-                line = first[0][0]
-                if self.remove_expression:
-                    line = _re.sub(self.remove_expression, "", line)
-                n_fields = len(
-                    next(
-                        _csv.reader(
-                            _io.StringIO(line),
-                            delimiter=self.delimiter,
-                            quotechar=self.quote,
-                        )
-                    )
-                )
-            else:
-                n_fields = 0
-            cols = [f"_c{i}" for i in range(n_fields)]
+            cols = [f"_c{i}" for i in range(len(self._first_fields(spark)))]
         schema_ddl = ", ".join(f"`{c}` STRING" for c in cols)
         lines = self._raw_lines(spark)
         if self.header:
